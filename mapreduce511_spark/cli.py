@@ -61,13 +61,24 @@ def cmd_wordcount(args: argparse.Namespace) -> int:
         .write.mode("overwrite")
         .text(args.output)
     )
-    total = counts.agg(F.sum("cnt")).first()[0]
-    print(f"wordcount: {counts.count()} distinct words, {total} tokens -> {args.output}")
+    # One action for both totals: each action re-runs scan+aggregate.
+    distinct, total = counts.agg(F.count("*"), F.sum("cnt")).first()
+    print(f"wordcount: {distinct} distinct words, {total} tokens -> {args.output}")
     return 0
 
 
 def cmd_analyze(args: argparse.Namespace) -> int:
-    """Experiment tree → result_raw.csv + six wide reports (+charts)."""
+    """Experiment tree → result_raw.csv + six wide reports (+charts).
+
+    The seven reports and the charts all derive from two small frames,
+    the per-config stage summary and the averaged CPU series. Both are
+    built once per call and pinned with an eager ``localCheckpoint``,
+    so each sink and the chart collect plans over a few thousand rows
+    instead of re-reading and re-parsing every log file. A lost
+    executor makes the later reads fail loudly (``Checkpoint block …
+    not found``) rather than return wrong answers (DEPLOY.md "Session
+    memos and executor loss").
+    """
     import os
 
     from mapreduce511_spark.plans import (
@@ -79,7 +90,7 @@ def cmd_analyze(args: argparse.Namespace) -> int:
         stage_summary,
         wide_report,
     )
-    from mapreduce511_spark.plans.report import write_report_csv
+    from mapreduce511_spark.plans.report import result_raw, write_report_csv
     from mapreduce511_spark.plans.runs import experiment_lines
 
     spark = _spark(args.cpus)
@@ -87,11 +98,9 @@ def cmd_analyze(args: argparse.Namespace) -> int:
     stg = stage_metrics(
         parse_progress_lines(experiment_lines(spark, args.tree, "job_output.log"))
     )
-    summ = stage_summary(stg)
-    cpu_series = averaged_series(mon, "cpu")
+    summ = stage_summary(stg).localCheckpoint()
+    cpu_series = averaged_series(mon, "cpu").localCheckpoint()
     cpu = config_metric_mean(cpu_series, "cpu")
-
-    from mapreduce511_spark.plans.report import result_raw
 
     os.makedirs(args.out, exist_ok=True)
     write_report_csv(result_raw(summ, cpu), os.path.join(args.out, "result_raw"))

@@ -95,33 +95,50 @@ def wide_report(
 
     ``direction``: 'min' (time-like), 'max' (cpu/overlap), or None →
     'N/A' (slowstart-invariant metrics). Best is computed on the
-    rounded cell values; ties are comma-joined ascending.
+    rounded cell values (slowstarts outside ``levels`` compete too);
+    ties are comma-joined ascending. A dataset with no non-null cell,
+    and a null dataset key, get no row, except in the 'N/A' form.
+
+    One aggregate per report: each pivot cell is a conditional
+    ``first``, and best + ties come from the dataset's collected
+    ``(v, slowstart)`` pairs — structs order by ``v`` then
+    ``slowstart``, so ``array_min``/``array_max`` give the best value
+    and ``sort_array`` the ascending ties.
     """
     cells = long_df.select(
         "dataset", "slowstart", F.round(F.col(value_col), 2).alias("v")
     )
-    wide = cells.groupBy("dataset").pivot("slowstart", list(levels)).agg(F.first("v"))
+    pivot = [
+        F.first(F.when(F.col("slowstart") == lvl, F.col("v")), ignorenulls=True)
+        .alias(str(lvl))
+        for lvl in levels
+    ]
+    wide_cols = ["dataset", *(f"`{lvl}`" for lvl in levels)]  # names hold dots
 
     if direction is None:
-        return wide.withColumn("best_slowstart", F.lit("N/A"))
+        return (
+            cells.groupBy("dataset")
+            .agg(*pivot)
+            .select(*wide_cols, F.lit("N/A").alias("best_slowstart"))
+        )
 
-    agg = F.min("v") if direction == "min" else F.max("v")
-    best = cells.groupBy("dataset").agg(agg.alias("best_v"))
-    ties = (
-        cells.join(best, "dataset")
-        .filter(F.col("v") == F.col("best_v"))
+    pairs = F.collect_list(
+        F.when(F.col("v").isNotNull(), F.struct("v", "slowstart"))
+    ).alias("pairs")
+    best_v = (F.array_min if direction == "min" else F.array_max)("pairs")["v"]
+    ties = F.sort_array(F.filter("pairs", lambda p: p["v"] == best_v))
+    return (
+        cells.filter(F.col("dataset").isNotNull())
         .groupBy("dataset")
-        .agg(
+        .agg(*pivot, pairs)
+        .filter(F.size("pairs") > 0)
+        .select(
+            *wide_cols,
             F.array_join(
-                F.transform(
-                    F.sort_array(F.collect_list("slowstart")),
-                    lambda s: s.cast("string"),
-                ),
-                ",",
-            ).alias("best_slowstart")
+                F.transform(ties, lambda p: p["slowstart"].cast("string")), ","
+            ).alias("best_slowstart"),
         )
     )
-    return wide.join(ties, "dataset")
 
 
 def write_report_csv(report: DataFrame, path: str) -> None:

@@ -45,6 +45,74 @@ def test_cli_analyze_reference_tree(spark, tmp_path, capsys):
     assert "7 report tables" in capsys.readouterr().out
 
 
+WIDE_HEADER = "dataset,0.2,0.5,0.8,1.0,best_slowstart"
+REPORT_HEADERS = {
+    "result_raw": "dataset,slowstart,total_s,avg_cpu,map_s,shuffle_s,reduce_s,overlap_pct",
+    **{
+        name: WIDE_HEADER
+        for name in (
+            "result_time result_map result_shuffle result_reduce "
+            "result_overlap result_cpu"
+        ).split()
+    },
+}
+
+
+def test_cli_analyze_fixture_tree(spark, tmp_path, capsys):
+    """`analyze` over the synthetic two-layout tree: seven single-file
+    reports with their headers, result_raw equal to the library plan,
+    one chart per dataset, and a bounded number of Spark jobs (the
+    shared frames are built once, not once per report)."""
+    from mapreduce511_spark.plans import (
+        averaged_series,
+        config_metric_mean,
+        parse_monitor_lines,
+        parse_progress_lines,
+        result_raw,
+        stage_metrics,
+        stage_summary,
+    )
+    from mapreduce511_spark.plans.fixtures import build_fixture_tree
+    from mapreduce511_spark.plans.runs import experiment_lines
+
+    tree = build_fixture_tree(str(tmp_path / "tree"))
+    out = str(tmp_path / "results")
+    sc = spark.sparkContext
+    sc.setJobGroup("cli-analyze-fixture", "cli analyze job count")
+    try:
+        rc = main(["analyze", "--tree", tree, "--out", out])
+    finally:
+        sc._jsc.clearJobGroup()
+    assert rc == 0
+    assert "7 report tables" in capsys.readouterr().out
+    jobs = sc.statusTracker().getJobIdsForGroup("cli-analyze-fixture")
+    assert 0 < len(jobs) <= 30, len(jobs)
+
+    for name, header in REPORT_HEADERS.items():
+        parts = glob.glob(f"{out}/{name}/part-*.csv")
+        assert len(parts) == 1, name
+        with open(parts[0]) as fh:
+            assert fh.readline().rstrip("\n") == header, name
+
+    mon = parse_monitor_lines(experiment_lines(spark, tree, "monitor.log"))
+    stg = stage_metrics(
+        parse_progress_lines(experiment_lines(spark, tree, "job_output.log"))
+    )
+    series = averaged_series(mon, "cpu")
+    want = result_raw(stage_summary(stg), config_metric_mean(series, "cpu"))
+    got = spark.read.csv(f"{out}/result_raw", header=True, schema=want.schema)
+
+    def key(r):
+        return (r["dataset"], r["slowstart"])
+
+    assert sorted(got.collect(), key=key) == sorted(want.collect(), key=key)
+
+    datasets = {r["dataset"] for r in series.select("dataset").distinct().collect()}
+    assert sorted(os.listdir(f"{out}/charts")) == sorted(
+        f"averaged_cpu_{ds}.svg" for ds in datasets
+    )
+
+
 def test_cli_sweep(spark, capsys):
     rc = main(["sweep", "--sf-dir", SF_SMOKE, "--values", "4", "8"])
     assert rc == 0

@@ -999,3 +999,24 @@ def test_embedding_exact_spec_bnlj_condition_is_arithmetic_free(spark):
     for needle in ("aggregate(", "zip_with(", "Multiply", "*", "GetArrayItem"):
         assert needle not in cond, (needle, cond)
     assert "<" in cond, cond
+
+
+def test_wide_report_is_one_aggregate(spark):
+    """Each wide report is one groupBy over its long frame: pivot cells,
+    best value and ties all come out of a single Aggregate, with no
+    join back onto a separate best-value aggregate."""
+    from mapreduce511_spark.plans.report import wide_report
+
+    long_df = spark.createDataFrame(
+        [("100MB", 0.5, 1.0), ("100MB", 1.0, 1.004), ("1G", 0.2, 2.0)],
+        "dataset string, slowstart double, total_s double",
+    )
+    plan = (
+        wide_report(long_df, "total_s", "min")
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    ops = [line.lstrip(" :+-") for line in plan.splitlines()]
+    assert sum(op.startswith("Aggregate ") for op in ops) == 1, plan
+    assert "Join" not in plan, plan
